@@ -187,21 +187,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata tables are single ~1-30MB files; the 128MB default would
-      // scan each on ONE task. 4MB splits parallelize the scan stage while
-      // staying far above per-task overhead. At real scale (many files /
-      // row groups) this conf is harmless.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-bench",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     muteKnownNoise("org.apache.spark.scheduler.DAGScheduler",
       "Failed to update accumulator")
     muteKnownNoise("org.apache.spark.sql.execution.window.WindowExec",

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions()) ...
+  * // or, in code, on the session builder
+  * .withExtensions(new GraftExtensions())
   * }}}
   *
   * This is the cluster-deployment story for the engine's SQL surface:

@@ -62,10 +62,8 @@ object Tables {
   /** The events table with `ts` normalized to TimestampType (see
     * [[normalizeTs]] for the encoding-drift story).
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(load(spark, sfDir, "events"))
-  }
   /** The events table as a bounded file STREAM (same rows as [[events]]) —
     * drives the streaming operators from real testdata. The stream source
     * cannot infer schema, so the declared schema is taken from a one-off
@@ -73,7 +71,6 @@ object Tables {
     * through the same normalization as the batch path.
     */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = load(spark, sfDir, "events").schema
     // the file-stream source requires a directory; glob-filter to the table
     normalizeTs(spark.readStream.schema(schema)
@@ -125,10 +122,10 @@ object Tables {
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
 
-  /** Session factory used by tests / ad-hoc mains. Verify/Bench build their
-    * own (driver contract) but share these settings.
+  /** The one session factory: Verify, Bench, the tools and the specs all
+    * build through it, so correctness runs under the confs the bench times.
     */
-  def session(appName: String = "graft", cores: Int = 32): SparkSession = {
+  def session(appName: String, cores: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -140,6 +137,10 @@ object Tables {
       // row groups) this conf is harmless.
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.session.timeZone", "UTC")
+      // TIMESTAMP(NANOS) parquet surfaces as LONG nanos, which
+      // [[normalizeTs]] converts; set here, once, so loading `events`
+      // changes no session state
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // RocksDB is the streaming state-store DEFAULT here, not an opt-in:
       // the HDFS-backed store keeps every key on the executor heap, which
       // caps stateful queries (dedup sets, top-k heaps, attribution maps)

@@ -26,6 +26,15 @@ object StreamingEventJoins {
 
   private def interval(w: String) = expr(s"INTERVAL $w")
 
+  /** Watermark `events` by `ts` and prefix its columns
+    * (`<prefix>_key`, `<prefix>_value`, `<prefix>_ts`), so the two sides
+    * of a join stay unambiguous.
+    */
+  private def side(events: DataFrame, prefix: String, watermarkDelay: String): DataFrame =
+    events.withWatermark("ts", watermarkDelay).select(
+      col("key").as(s"${prefix}_key"), col("value").as(s"${prefix}_value"),
+      col("ts").as(s"${prefix}_ts"))
+
   /** Q1 streaming: for each click, displays with the same key in
     * `[click.ts - W, click.ts]`; merged JSON payload exactly as the
     * reference's ValueJoiner (`TimeoutJoinTest.scala:76-78`):
@@ -33,12 +42,8 @@ object StreamingEventJoins {
     */
   def clickedDisplays(displays: DataFrame, clicks: DataFrame,
       window: String = "1 SECOND", watermarkDelay: String = "5 seconds"): DataFrame = {
-    val d = displays
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("d_key"), col("value").as("d_value"), col("ts").as("d_ts"))
-    val c = clicks
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("c_key"), col("value").as("c_value"), col("ts").as("c_ts"))
+    val d = side(displays, "d", watermarkDelay)
+    val c = side(clicks, "c", watermarkDelay)
     c.join(d,
         col("d_key") === col("c_key") &&
           col("d_ts") >= col("c_ts") - interval(window) &&
@@ -52,9 +57,10 @@ object StreamingEventJoins {
   }
 
   /** Q2 streaming: displays with no click of the same key in
-    * `[display.ts, display.ts + W]` — watermarked left-outer interval join;
-    * the unmatched (null-padded) display is emitted when the watermark
-    * passes `display.ts + W`, with the ORIGINAL payload unchanged
+    * `[display.ts, display.ts + W]` — the `missed` rows of [[viewOutcomes]]'s
+    * watermarked left-outer interval join; the unmatched (null-padded)
+    * display is emitted when the watermark passes `display.ts + W`, with
+    * the ORIGINAL payload unchanged
     * (`TimeoutJoinTest.scala:89-91` mapValues back to the display value).
     *
     * Left-outer + isNull is not just reference-faithful: Spark (through
@@ -63,21 +69,9 @@ object StreamingEventJoins {
     * left_anti — `EventJoins.missedDisplays`.)
     */
   def missedDisplays(displays: DataFrame, clicks: DataFrame,
-      window: String = "1 SECOND", watermarkDelay: String = "5 seconds"): DataFrame = {
-    val d = displays
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("d_key"), col("value").as("d_value"), col("ts").as("d_ts"))
-    val c = clicks
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("c_key"), col("value").as("c_value"), col("ts").as("c_ts"))
-    d.join(c,
-        col("d_key") === col("c_key") &&
-          col("c_ts") >= col("d_ts") &&
-          col("c_ts") <= col("d_ts") + interval(window),
-        "left_outer")
-      .filter(col("c_key").isNull)
-      .select(col("d_key").as("key"), col("d_value").as("value"), col("d_ts").as("ts"))
-  }
+      window: String = "1 SECOND", watermarkDelay: String = "5 seconds"): DataFrame =
+    viewOutcomes(displays, clicks, window, watermarkDelay)
+      .filter(col("status") === "missed").drop("status")
 
   /** Q5 streaming: EVERY display with its outcome in one query —
     * `joined` when a click of the same key lands in
@@ -91,12 +85,8 @@ object StreamingEventJoins {
     */
   def viewOutcomes(displays: DataFrame, clicks: DataFrame,
       window: String = "1 SECOND", watermarkDelay: String = "5 seconds"): DataFrame = {
-    val d = displays
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("d_key"), col("value").as("d_value"), col("ts").as("d_ts"))
-    val c = clicks
-      .withWatermark("ts", watermarkDelay)
-      .select(col("key").as("c_key"), col("value").as("c_value"), col("ts").as("c_ts"))
+    val d = side(displays, "d", watermarkDelay)
+    val c = side(clicks, "c", watermarkDelay)
     d.join(c,
         col("d_key") === col("c_key") &&
           col("c_ts") >= col("d_ts") &&
@@ -107,13 +97,4 @@ object StreamingEventJoins {
         col("d_ts").as("ts"),
         when(col("c_key").isNull, lit("missed")).otherwise(lit("joined")).as("status"))
   }
-
-  /** Q3 streaming: event-time shift with derived-stream lineage name
-    * (`<name>.<suffix>`, mirroring `TopicShifter.scala:20`). Works on both
-    * batch and streaming DataFrames (same code — Spark's unified API).
-    */
-  def timeShift(stream: DataFrame, window: String, streamName: String, suffix: String): DataFrame =
-    stream
-      .withColumn("ts", col("ts") + interval(window))
-      .withColumn("stream", lit(s"$streamName.$suffix"))
 }

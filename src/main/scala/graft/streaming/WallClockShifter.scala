@@ -1,8 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** Wall-clock-faithful re-implementation of the reference's headline custom
   * operator, the topic shifter (`/root/reference/src/test/scala/me/dummy/
@@ -16,16 +17,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference holds records by sleeping the stream thread
   * (`Thread.sleep(diff)`, `TopicShifter.scala:32`), which serializes the
-  * pipeline. Here the hold is state + a processing-time timer
-  * (`flatMapGroupsWithState` with `ProcessingTimeTimeout`): records buffer
-  * in keyed state, a timer fires at the earliest due emission, and emission
-  * happens on the firing micro-batch — throughput is partition-parallel and
-  * nothing blocks.
+  * pipeline. Here the hold is `transformWithState` state plus REAL per-key
+  * processing-time timers (`registerTimer`): each buffered record arms its
+  * own timer, so a key receiving a steady trickle still releases earlier
+  * records on time, throughput is partition-parallel and nothing blocks.
   *
-  * Note the event-time variant ([[StreamingEventJoins.timeShift]]) is what
-  * downstream joins actually need (SURVEY §7.4.2); this operator exists for
-  * fidelity with the reference's delivery-time semantics ("process a topic
-  * with a delay", `README.md:20`).
+  * Requires the RocksDB state store provider, the session factory's
+  * default — transformWithState state lives in per-state column families,
+  * which the HDFS-backed provider does not support.
+  *
+  * Note the event-time variant ([[graft.operators.EventJoins.timeShift]])
+  * is what downstream joins actually need (SURVEY §7.4.2); this operator
+  * exists for fidelity with the reference's delivery-time semantics
+  * ("process a topic with a delay", `README.md:20`).
   */
 object WallClockShifter {
 
@@ -33,27 +37,43 @@ object WallClockShifter {
   /** Buffered record awaiting its delivery time (public: encoder codegen). */
   case class Pending(value: String, ts: Long, dueAt: Long)
 
+  class ShiftProcessor(delayMs: Long) extends StatefulProcessor[String, Rec, Rec] {
+    @transient private var buffer: ListState[Pending] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      buffer = getHandle.getListState[Pending](
+        "pending", Encoders.product[Pending], TTLConfig.NONE)
+
+    override def handleInputRows(key: String, rows: Iterator[Rec],
+        timers: TimerValues): Iterator[Rec] = {
+      val now = timers.getCurrentProcessingTimeInMs()
+      // dueAt anchored to the record's EVENT timestamp (reference
+      // semantics, TopicShifter.scala:29-31); records already past due
+      // emit on this very batch instead of arming a stale timer
+      val (due, pending) = rows.map { r =>
+        Pending(r.value, r.ts.getTime, r.ts.getTime + delayMs)
+      }.toList.partition(_.dueAt <= now)
+      pending.foreach { p =>
+        buffer.appendValue(p)
+        getHandle.registerTimer(p.dueAt)
+      }
+      due.iterator.map(p => Rec(key, p.value, new Timestamp(p.ts)))
+    }
+
+    override def handleExpiredTimer(key: String, timers: TimerValues,
+        expired: ExpiredTimerInfo): Iterator[Rec] = {
+      val now = expired.getExpiryTimeInMs()
+      val (due, pending) = buffer.get().toList.partition(_.dueAt <= now)
+      if (pending.isEmpty) buffer.clear() else buffer.put(pending.toArray)
+      due.iterator.map(p => Rec(key, p.value, new Timestamp(p.ts)))
+    }
+  }
+
   def shift(spark: SparkSession, events: Dataset[Rec], delayMs: Long): Dataset[Rec] = {
     import spark.implicits._
     events
       .groupByKey(_.key)
-      .flatMapGroupsWithState[List[Pending], Rec](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: String, rows: Iterator[Rec], state: GroupState[List[Pending]]) =>
-          val now = System.currentTimeMillis()
-          // dueAt anchored to the record's EVENT timestamp (reference
-          // semantics, TopicShifter.scala:29-31): a record already older
-          // than the delay is due immediately
-          val buffered = state.getOption.getOrElse(Nil) ++
-            rows.map(r => Pending(r.value, r.ts.getTime, r.ts.getTime + delayMs))
-          val (due, pending) = buffered.partition(_.dueAt <= now)
-          if (pending.nonEmpty) {
-            state.update(pending)
-            state.setTimeoutDuration(math.max(1L, pending.map(_.dueAt).min - now))
-          } else {
-            state.remove()
-          }
-          due.iterator.map(p => Rec(key, p.value, new Timestamp(p.ts)))
-      }
+      .transformWithState(new ShiftProcessor(delayMs),
+        TimeMode.ProcessingTime(), OutputMode.Append())
   }
 }

@@ -53,4 +53,11 @@ object GraftBridge {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far — listeners run asynchronously, so a caller reading what they
+    * captured must drain first.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,12 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Guards the driver contract itself: a typo'd oracle key would silently
   * detach a query from the correctness gate, and an accidental oracle for
   * an LSH/sketch query would FAIL the gate (they are not SQL-expressible).
   */
-class ContractSpec extends AnyFunSuite {
+class ContractSpec extends SparkSpec {
 
   // round 7: the last 5 LSH/ANN queries moved OUT of this set — their
   // validated forms emit the exact pair/top-k rows plus an in-band
@@ -27,5 +25,15 @@ class ContractSpec extends AnyFunSuite {
       assert(sql.trim.nonEmpty, s"$k: empty oracle")
       assert(!sql.trim.stripSuffix(";").contains(";"), s"$k: multiple statements")
     }
+  }
+
+  test("query numbers run gapless from q1 to the highest") {
+    val nums = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_').drop(1).toInt)
+    val gaps = (1 to nums.max).filterNot(nums)
+    assert(gaps.isEmpty, s"gaps below q${nums.max}: $gaps")
+  }
+
+  test("the entry query returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 }

@@ -11,36 +11,21 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val shared: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse")
-      // mirror Tables.session: RocksDB is the engine's streaming
-      // state-store default, so EVERY streaming spec exercises it — the
-      // per-test conf.set calls that predate this default are redundant
-      // but harmless
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit the per-batch CHANGELOG instead of
-      // a full snapshot zip every batch (snapshots roll up async in
-      // maintenance) — mirrors Tables.session
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // checkpoint file checksums OFF in tests only: Spark 4.1's checksum
-      // file manager issues Hadoop RawLocalFileSystem metadata calls that
-      // fork a shell per file (FileUtil.readLink); combined with RocksDB's
-      // many-small-file uploads this livelocks micro-batch tests for
-      // minutes (observed: 32 task threads parked in
-      // ChecksumCancellableFSDataOutputStream.close while the checksum
-      // pool fork/execs). Cluster filesystems (HDFS/S3) don't shell out,
-      // so Tables.session keeps the corruption-detection default.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // static conf, so it must be in place before the session is built
+    // (SparkConf reads `spark.*` system properties): BucketedTablesSpec's
+    // saveAsTable tables go to a temp warehouse, not the working directory
+    sys.props("spark.sql.warehouse.dir") =
+      s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse"
+    val s = Tables.session("graft-test", 4)
+    // checkpoint file checksums OFF in tests only: Spark 4.1's checksum
+    // file manager issues Hadoop RawLocalFileSystem metadata calls that
+    // fork a shell per file (FileUtil.readLink); combined with RocksDB's
+    // many-small-file uploads this livelocks micro-batch tests for
+    // minutes (observed: 32 task threads parked in
+    // ChecksumCancellableFSDataOutputStream.close while the checksum
+    // pool fork/execs). Cluster filesystems (HDFS/S3) don't shell out,
+    // so Tables.session keeps the corruption-detection default.
+    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -90,7 +90,7 @@ class StreamingEventJoinsSpec extends SparkSpec {
   test("time-shift stream: ts' = ts + W, payload and key unchanged, lineage column") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val s = MemoryStream[Evt]
-    val shifted = StreamingEventJoins.timeShift(s.toDF(), "10 SECONDS", "display", "10s")
+    val shifted = graft.operators.EventJoins.timeShift(s.toDF(), "ts", "10 SECONDS", "display", "10s")
     val q = shifted.writeStream.format("memory").queryName("shift_out")
       .outputMode("append").start()
     s.addData(Evt(keyA, display, T0))

@@ -19,44 +19,42 @@ class WallClockShifterSpec extends SparkSpec {
 
   test("transformWithState shifter: per-record timers release at ts + delay") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // transformWithState needs column families -> RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Rec]
-    val delayMs = 2000L
-    val out = WallClockShifterTws.shift(spark, in.toDS(), delayMs)
+    val delayMs = 1500L
+    val out = WallClockShifter.shift(spark, in.toDS(), delayMs)
     val q = out.writeStream.format("memory").queryName("tws_shifted")
       .outputMode("append")
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
     try {
       val t0 = System.currentTimeMillis()
-      val evTs = new Timestamp(t0) // fresh record: due at t0 + delay
-      in.addData(Rec("k1", """{"type":"display"}""", evTs))
-      var rows = Array.empty[Rec]
-      while (rows.isEmpty && System.currentTimeMillis() - t0 < 20000) {
-        Thread.sleep(250)
-        rows = spark.table("tws_shifted").as[Rec].collect()
+      // one key, two records: each arms its own timer and is released at
+      // its own ts + delay, the later one no earlier than its own due time
+      val early = Rec("k1", "a", new Timestamp(t0))
+      val late = Rec("k1", "b", new Timestamp(t0 + delayMs))
+      in.addData(early, late)
+      val seenAt = scala.collection.mutable.Map.empty[String, Long]
+      while (seenAt.size < 2 && System.currentTimeMillis() - t0 < 20000) {
+        Thread.sleep(100)
+        val rows = spark.table("tws_shifted").as[Rec].collect()
+        // read the clock after the collect: a row seen here was emitted by now
+        val now = System.currentTimeMillis() - t0
+        rows.foreach(r => seenAt.getOrElseUpdate(r.value, now))
       }
-      val elapsed = System.currentTimeMillis() - t0
-      assert(rows.length == 1, s"expected 1 emission, got ${rows.length}")
-      assert(rows.head == Rec("k1", """{"type":"display"}""", evTs))
-      assert(elapsed >= delayMs, s"emitted after ${elapsed}ms < ${delayMs}ms delay")
-    } finally {
-      q.stop()
-      // keep the session's RocksDB provider default: conf.unset falls to
-      // the hard default (HDFSBacked) and breaks later transformWithState
-      // suites with STATE_STORE_MULTIPLE_COLUMN_FAMILIES
-    }
+      assert(spark.table("tws_shifted").as[Rec].collect().sortBy(_.value).toSeq ==
+        Seq(early, late))
+      assert(seenAt("a") >= delayMs, s"a emitted at ${seenAt("a")}ms")
+      assert(seenAt("b") >= 2 * delayMs, s"b emitted at ${seenAt("b")}ms")
+      // b stays held when a is released (if that poll ran before b's due)
+      if (seenAt("a") < 2 * delayMs) assert(seenAt("b") > seenAt("a"))
+    } finally q.stop()
   }
 
   test("transformWithState shifter: already-old records emit immediately (replay path)") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Rec]
     val delayMs = 60000L // a minute — an arrival-anchored hold would time the test out
-    val out = WallClockShifterTws.shift(spark, in.toDS(), delayMs)
+    val out = WallClockShifter.shift(spark, in.toDS(), delayMs)
     val q = out.writeStream.format("memory").queryName("tws_replay")
       .outputMode("append")
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
@@ -74,12 +72,7 @@ class WallClockShifterSpec extends SparkSpec {
       assert(rows.length == 1, s"expected 1 immediate emission, got ${rows.length}")
       assert(rows.head == Rec("k1", """{"type":"display"}""", evTs))
       assert(elapsed < delayMs, s"old record was re-delayed (${elapsed}ms)")
-    } finally {
-      q.stop()
-      // keep the session's RocksDB provider default: conf.unset falls to
-      // the hard default (HDFSBacked) and breaks later transformWithState
-      // suites with STATE_STORE_MULTIPLE_COLUMN_FAMILIES
-    }
+    } finally q.stop()
   }
 
   test("holds records until ts + delay, then emits them unchanged") {

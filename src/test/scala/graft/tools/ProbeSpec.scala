@@ -1,0 +1,27 @@
+package graft.tools
+
+import graft.SparkSpec
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
+/** The probe reports the plan that ran: the measured run's AQE-final plan,
+  * not a pre-execution snapshot of a DataFrame that never executed.
+  */
+class ProbeSpec extends SparkSpec {
+  private lazy val q1 = Probe.run(spark, sf, "q1_clicked_display")
+
+  test("plan mode prints the AQE-final plan") {
+    val plan = Probe.plan(q1)
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(!plan.contains("isFinalPlan=false"), plan)
+  }
+
+  test("scans mode counts the Scan parquet nodes of that same plan") {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(q1.qe.executedPlan) { case s: FileSourceScanExec => s }
+    val reused = helper.collect(q1.qe.executedPlan) { case r: ReusedExchangeExec => r }
+    assert(scans.nonEmpty)
+    assert(Probe.scans(q1) == (scans.size, reused.size))
+  }
+}
