@@ -94,18 +94,6 @@ object EventJoins {
   def missedDisplays(events: DataFrame, window: String = "1 HOUR"): DataFrame =
     afterWindowJoin(events, window, "left_anti")
 
-  /** Q2 alternative formulation mirroring the reference's own topology
-    * (left-outer join + right-is-null filter + projection,
-    * `TimeoutJoinTest.scala:82-92`) — semantically identical to
-    * [[missedDisplays]]; kept because the STREAMING lift must use this
-    * shape (stream-stream LeftAnti is unsupported through Spark 4.1).
-    */
-  def missedDisplaysOuter(events: DataFrame, window: String = "1 HOUR"): DataFrame =
-    afterWindowJoin(events, window, "left_outer")
-      .filter(col("c_user_id").isNull)
-      .select(col("user_id"), col("event_id"), col("ts"))
-      .distinct() // a view out-joins at most once; documents set semantics
-
   /** Q3: event-time shift — identity on every column except `ts' = ts + W`,
     * with the derived-stream name `<name>.<W>` carried as a column (the
     * reference encodes lineage in topic names, `TopicShifter.scala:20`).

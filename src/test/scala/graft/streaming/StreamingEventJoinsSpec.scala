@@ -116,8 +116,8 @@ class StreamingEventJoinsSpec extends SparkSpec {
       clicks.addData(Evt(keyA, click, plus(5))); q.processAllAvailable()
       // keyA matched inside the window — emits without any watermark help
       val early = spark.table("outcomes_out")
-        .select("key", "status").as[(String, String)].collect().toSet
-      assert(early == Set(keyA -> "joined"),
+        .select("key", "status").as[(String, String)].collect().toSeq
+      assert(early == Seq(keyA -> "joined"),
         s"matched outcome must emit per micro-batch, got $early")
       displays.addData(Evt("hb", "{}", plus(50)))
       clicks.addData(Evt("hb2", "{}", plus(50))); q.processAllAvailable()
@@ -126,11 +126,107 @@ class StreamingEventJoinsSpec extends SparkSpec {
     } finally q.stop()
     val rows = spark.table("outcomes_out")
       .select("key", "value", "status").as[(String, String, String)].collect()
-      .filterNot(_._1.startsWith("hb")).toSet
+      .filterNot(_._1.startsWith("hb")).toSeq.sorted
     // one outcome per display: keyA joined, keyB (never clicked) missed
-    assert(rows == Set(
+    assert(rows == Seq(
       (keyA, display, "joined"),
       (keyB, display, "missed")))
+  }
+
+  private def micros(t: Timestamp) = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+  /** `T0 + sec` seconds `+ us` µs, exact to the µs. */
+  private def at(sec: Double, us: Int = 0): Timestamp = {
+    val t = new Timestamp(T0.getTime + (sec * 1000).round)
+    t.setNanos(t.getNanos + us * 1000)
+    t
+  }
+  private def tick(sec: Double) = (Seq(Evt("hb", "{}", at(sec))), Seq(Evt("hb2", "{}", at(sec))))
+
+  /** (displays, clicks) per micro-batch; W = 10 s, watermark delay 1 s.
+    *  A: two clicks, in two batches -> joined once
+    *  B: its only click is 1 s before it in event time -> missed
+    *  C: its click arrives one batch before it -> joined
+    *  D: click at exactly d.ts + W -> joined; E: at d.ts + W + 1 µs -> missed
+    *  F: a click after the window, arriving after F was reported -> missed
+    *  G: two displays, one click in both windows -> joined twice
+    *  H: two displays, one click in the second's window only -> missed, joined
+    * Every row is ahead of the watermark (the min over both sides, less
+    * the delay) when it arrives, so none may be dropped as late.
+    */
+  private val outcomeBatches: Seq[(Seq[Evt], Seq[Evt])] = {
+    def d(k: String, sec: Double) = Evt(k, s"""{"display":"$k@$sec"}""", at(sec))
+    def c(k: String, sec: Double, us: Int = 0) = Evt(k, click, at(sec, us))
+    Seq(
+      (Seq(d("A", 0), d("B", 2), d("D", 0), d("E", 0), d("F", 0), d("G", 0), d("H", 0)),
+        Seq(c("B", 1), c("C", 2))), // watermark 1 s
+      (Seq(d("C", 1.5), d("G", 1.5), d("H", 5), d("hb", 8)),
+        Seq(c("A", 3), c("G", 8), c("hb2", 8))), // 7 s
+      (Seq(d("hb", 12)),
+        Seq(c("A", 9), c("D", 10), c("E", 10, us = 1), c("H", 12), c("hb2", 12))), // 11 s: E, F missed
+      (Seq(d("hb", 13)), Seq(c("F", 12.5), c("hb2", 13))), // 12 s
+      tick(40), tick(50))
+  }
+
+  /** The outcome rule by brute force: a display is joined iff a same-key
+    * click lies in `[d.ts, d.ts + W]`, in µs; sorted (key, ts µs, status).
+    */
+  private def bruteForce(batches: Seq[(Seq[Evt], Seq[Evt])], windowUs: Long): Seq[(String, Long, String)] = {
+    val clicks = batches.flatMap(_._2)
+    batches.flatMap(_._1).filterNot(_.key.startsWith("hb")).map { d =>
+      val du = micros(d.ts)
+      val hit = clicks.exists(c => c.key == d.key && micros(c.ts) >= du && micros(c.ts) <= du + windowUs)
+      (d.key, du, if (hit) "joined" else "missed")
+    }.sorted
+  }
+
+  /** `viewOutcomes` (W 10 s, delay 1 s) over `batches`, through a
+    * foreachBatch sink keyed by batch id (a replayed batch overwrites its
+    * rows), stopped and restarted on the same checkpoint before each batch
+    * index in `restartAt`. Returns the sorted non-heartbeat outcomes and the
+    * rows dropped by the watermark.
+    */
+  private def outcomes(batches: Seq[(Seq[Evt], Seq[Evt])],
+      restartAt: Set[Int] = Set.empty): (Seq[(String, Long, String)], Long) = {
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val displays = MemoryStream[Evt]
+    val clicks = MemoryStream[Evt]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_outcomes_ckpt").toString
+    val sunk = new java.util.concurrent.ConcurrentHashMap[Long, Seq[(String, Long, String)]]()
+    def start() = StreamingEventJoins.viewOutcomes(
+        displays.toDF(), clicks.toDF(), "10 SECONDS", "1 second")
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        sunk.put(id, b.select("key", "ts", "status").as[(String, Timestamp, String)].collect()
+          .map { case (k, t, st) => (k, micros(t), st) }.toSeq)
+        ()
+      }
+      .start()
+    def dropped(q: StreamingQuery) =
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    var q = start()
+    var drops = 0L
+    try batches.zipWithIndex.foreach { case ((ds, cs), i) =>
+      if (restartAt(i)) { q.stop(); drops += dropped(q); q = start() }
+      displays.addData(ds); clicks.addData(cs); q.processAllAvailable()
+    } finally { q.stop(); drops += dropped(q) }
+    (sunk.values().toArray(Array.empty[Seq[(String, Long, String)]]).toSeq.flatten
+      .filterNot(_._1.startsWith("hb")).sorted, drops)
+  }
+
+  test("view outcomes: the multiset of outcomes equals the brute-force rule (stream ≡ batch)") {
+    val (got, dropped) = outcomes(outcomeBatches)
+    assert(dropped == 0, s"$dropped rows dropped by the watermark")
+    assert(got == bruteForce(outcomeBatches, 10 * 1000000L))
+  }
+
+  test("view outcomes: stop/restart with displays pending equals an uninterrupted run") {
+    // stopped with timers armed: at the 7 s watermark B, D, E, F and H's
+    // first display are pending, at 12 s only B
+    val (restarted, droppedR) = outcomes(outcomeBatches, restartAt = Set(2, 4))
+    val (uninterrupted, droppedU) = outcomes(outcomeBatches)
+    assert(droppedR + droppedU == 0, s"${droppedR + droppedU} rows dropped by the watermark")
+    assert(restarted == uninterrupted)
+    assert(restarted == bruteForce(outcomeBatches, 10 * 1000000L))
   }
 
   test("left-outer timing: missed row emits only after the watermark passes the join bound") {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.sql.Timestamp
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -17,16 +18,34 @@ class WallClockShifterSpec extends SparkSpec {
   import spark.implicits._
   import WallClockShifter.Rec
 
+  /** Starts a memory-sink query on its own checkpoint dir and deletes the
+    * dir only once the query has stopped and no job is left running: the
+    * shifter's processing-time timers keep batches in flight, and deleting
+    * a checkpoint under them fails their state-store loads.
+    */
+  private def withQuery(out: org.apache.spark.sql.Dataset[Rec], name: String)(body: => Unit): Unit = {
+    val ckpt = Files.createTempDirectory(s"graft_${name}_ckpt")
+    val q = out.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime("200 milliseconds"))
+      .start()
+    try body
+    finally {
+      q.stop()
+      val deadline = System.currentTimeMillis() + 30000
+      while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+    }
+  }
+
   test("transformWithState shifter: per-record timers release at ts + delay") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[Rec]
     val delayMs = 1500L
     val out = WallClockShifter.shift(spark, in.toDS(), delayMs)
-    val q = out.writeStream.format("memory").queryName("tws_shifted")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
+    withQuery(out, "tws_shifted") {
       val t0 = System.currentTimeMillis()
       // one key, two records: each arms its own timer and is released at
       // its own ts + delay, the later one no earlier than its own due time
@@ -47,7 +66,7 @@ class WallClockShifterSpec extends SparkSpec {
       assert(seenAt("b") >= 2 * delayMs, s"b emitted at ${seenAt("b")}ms")
       // b stays held when a is released (if that poll ran before b's due)
       if (seenAt("a") < 2 * delayMs) assert(seenAt("b") > seenAt("a"))
-    } finally q.stop()
+    }
   }
 
   test("transformWithState shifter: already-old records emit immediately (replay path)") {
@@ -55,11 +74,7 @@ class WallClockShifterSpec extends SparkSpec {
     val in = MemoryStream[Rec]
     val delayMs = 60000L // a minute — an arrival-anchored hold would time the test out
     val out = WallClockShifter.shift(spark, in.toDS(), delayMs)
-    val q = out.writeStream.format("memory").queryName("tws_replay")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
+    withQuery(out, "tws_replay") {
       val t0 = System.currentTimeMillis()
       val evTs = Timestamp.valueOf("2024-01-01 10:00:00") // long past ts + delay
       in.addData(Rec("k1", """{"type":"display"}""", evTs))
@@ -72,7 +87,7 @@ class WallClockShifterSpec extends SparkSpec {
       assert(rows.length == 1, s"expected 1 immediate emission, got ${rows.length}")
       assert(rows.head == Rec("k1", """{"type":"display"}""", evTs))
       assert(elapsed < delayMs, s"old record was re-delayed (${elapsed}ms)")
-    } finally q.stop()
+    }
   }
 
   test("holds records until ts + delay, then emits them unchanged") {
@@ -80,11 +95,7 @@ class WallClockShifterSpec extends SparkSpec {
     val in = MemoryStream[Rec]
     val delayMs = 2000L
     val out = WallClockShifter.shift(spark, in.toDS(), delayMs)
-    val q = out.writeStream.format("memory").queryName("shifted")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
+    withQuery(out, "shifted") {
       val t0 = System.currentTimeMillis()
       val evTs = new Timestamp(t0) // fresh record: due at t0 + delay
       in.addData(Rec("k1", """{"type":"display"}""", evTs))
@@ -109,6 +120,6 @@ class WallClockShifterSpec extends SparkSpec {
       assert(rows.head == Rec("k1", """{"type":"display"}""", evTs),
         "record must be identical (key, value, event ts)")
       assert(elapsed >= delayMs, s"emitted after ${elapsed}ms < ${delayMs}ms delay")
-    } finally q.stop()
+    }
   }
 }
