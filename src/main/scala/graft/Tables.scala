@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the driver-generated parquet tables (TESTDATA.md).
   *
@@ -9,14 +12,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * catalog is a plain loader over parquet so Catalyst sees a file scan it can
   * push filters/pruning into. At cluster scale these reads become partitioned
   * multi-file scans — nothing here assumes single-file or local data.
+  *
+  * A table's schema comes from one parquet footer, read on the driver: the
+  * footer Spark's own inference reads, converted by Spark's own converter,
+  * so the schema equals `spark.read.parquet(path).schema` — but loading a
+  * table starts no Spark job (inference runs a one-task job per read).
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The schema Spark infers for a parquet path without `mergeSchema`:
+    * that of the first of `_common_metadata`, `_metadata` and the data
+    * files in path order (`ParquetUtils.inferSchema`). With `mergeSchema`
+    * Spark unions every file's schema, which one footer cannot give.
+    */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    require(!spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean,
+      "Tables.load reads one parquet footer per table, so it cannot honour " +
+        s"spark.sql.parquet.mergeSchema=true ($path)")
+    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val picked = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    require(picked.nonEmpty, s"no parquet file under $path")
+    GraftBridge.parquetFooterSchema(spark, picked.get)
+  }
 
   /** Normalize the `ts` column to session-timezone TimestampType whatever
     * the parquet writer emitted. Driver generations have flipped encodings
@@ -66,8 +94,8 @@ object Tables {
     normalizeTs(load(spark, sfDir, "events"))
   /** The events table as a bounded file STREAM (same rows as [[events]]) —
     * drives the streaming operators from real testdata. The stream source
-    * cannot infer schema, so the declared schema is taken from a one-off
-    * batch read of the same file (cheap: footer only), then `ts` runs
+    * cannot infer schema, so the declared schema is the batch [[load]]'s
+    * (cheap: one footer read on the driver, no Spark job), then `ts` runs
     * through the same normalization as the batch path.
     */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {

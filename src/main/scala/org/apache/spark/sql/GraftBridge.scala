@@ -54,6 +54,23 @@ object GraftBridge {
       case _ => ()
     }
 
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver and converted as Spark's own schema inference converts it
+    * (the stored Spark schema when the writer left one, else the parquet
+    * types under the session's parquet confs) — with no Spark job.
+    */
+  def parquetFooterSchema(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val metadata = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, metadata),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Block until the listener bus has delivered every event posted so
     * far — listeners run asynchronously, so a caller reading what they
     * captured must drain first.

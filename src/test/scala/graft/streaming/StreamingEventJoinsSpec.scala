@@ -26,22 +26,31 @@ class StreamingEventJoinsSpec extends SparkSpec {
   private val display = """{"type":"display"}"""
   private val click = """{"type":"click"}"""
 
+  /** The same events into one MemoryStream per query: a MemoryStream drops
+    * a batch once any query commits it, so two running queries must not
+    * share one (the slower one would read nothing, or fail on the other's
+    * out-of-order commit).
+    */
+  private final class Feed(streams: MemoryStream[Evt]*) {
+    def addData(events: Evt*): Unit = streams.foreach(_.addData(events))
+  }
+
   /** Run both pipelines over scripted batches; returns (joined, missed). */
   private def run(name: String)(
-      script: (MemoryStream[Evt], MemoryStream[Evt], () => Unit) => Unit): (Seq[(String, String)], Seq[(String, String)]) = {
+      script: (Feed, Feed, () => Unit) => Unit): (Seq[(String, String)], Seq[(String, String)]) = {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val displays = MemoryStream[Evt]
-    val clicks = MemoryStream[Evt]
+    val (displays1, clicks1) = (MemoryStream[Evt], MemoryStream[Evt])
+    val (displays2, clicks2) = (MemoryStream[Evt], MemoryStream[Evt])
     val joined = StreamingEventJoins.clickedDisplays(
-      displays.toDF(), clicks.toDF(), "10 SECONDS", "1 second")
+      displays1.toDF(), clicks1.toDF(), "10 SECONDS", "1 second")
     val missed = StreamingEventJoins.missedDisplays(
-      displays.toDF(), clicks.toDF(), "10 SECONDS", "1 second")
+      displays2.toDF(), clicks2.toDF(), "10 SECONDS", "1 second")
     val q1 = joined.writeStream.format("memory").queryName(s"${name}_joined")
       .outputMode("append").start()
     val q2 = missed.writeStream.format("memory").queryName(s"${name}_missed")
       .outputMode("append").start()
     def pump(): Unit = { q1.processAllAvailable(); q2.processAllAvailable() }
-    try script(displays, clicks, () => pump())
+    try script(new Feed(displays1, displays2), new Feed(clicks1, clicks2), () => pump())
     finally { q1.stop(); q2.stop() }
     def grab(t: String) = spark.table(s"${name}_$t")
       .select("key", "value").as[(String, String)].collect().toSeq
@@ -51,7 +60,7 @@ class StreamingEventJoinsSpec extends SparkSpec {
   /** Heartbeats on BOTH streams far in the future so every watermark
     * (min over inputs) passes the join bounds and outer rows flush.
     */
-  private def heartbeats(d: MemoryStream[Evt], c: MemoryStream[Evt], pump: () => Unit): Unit = {
+  private def heartbeats(d: Feed, c: Feed, pump: () => Unit): Unit = {
     d.addData(Evt("hb", "{}", plus(50))); c.addData(Evt("hb2", "{}", plus(50))); pump()
     d.addData(Evt("hb", "{}", plus(59))); c.addData(Evt("hb2", "{}", plus(59))); pump()
   }

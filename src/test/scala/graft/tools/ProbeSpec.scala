@@ -24,4 +24,10 @@ class ProbeSpec extends SparkSpec {
     assert(scans.nonEmpty)
     assert(Probe.scans(q1) == (scans.size, reused.size))
   }
+
+  test("stages mode shows no table-load stage: loading a table runs no job") {
+    val q2 = Probe.run(spark, sf, "q2_missed_display")
+    assert(q2.stages.nonEmpty)
+    assert(!q2.stages.exists(_.name.contains("Tables.scala")), Probe.stages(q2))
+  }
 }
