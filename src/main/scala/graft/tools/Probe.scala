@@ -4,9 +4,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import graft.{SparkEntry, Tables}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -25,7 +27,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * captures the measured run's QueryExecution — the one that executed, so
   * its adaptive plan is final — and one SparkListener its stages:
   *  - `plan`: the formatted AQE-final physical plan;
-  *  - `stages`: the run's total time and its top stages by duration;
+  *  - `stages`: the run's total time, the generated classes it compiled
+  *    (count and compile time) and its top stages by duration;
   *  - `scans`: `Scan parquet` and `ReusedExchange` counts of the final
   *    plan. A query scanning a table more often than its logical form
   *    needs (the q90 spine-join case: column pruning defeating
@@ -44,20 +47,30 @@ object Probe {
       runMs: Long, gcMs: Long, deserMs: Long, shuffleRead: Long,
       shuffleWrite: Long, input: Long)
 
-  /** The measured run of one query. */
+  /** The measured run of one query; `compiles` generated classes were
+    * compiled during it, in `compileMs`.
+    */
   final case class Run(query: String, seconds: Double, qe: QueryExecution,
-      stages: Seq[Stage])
+      stages: Seq[Stage], compiles: Long, compileMs: Double)
+
+  /** Janino compilations so far in this JVM and their total time in ns. A
+    * hit in Spark's generated-class cache adds to neither.
+    */
+  def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** One run of `query` through the noop sink. */
+  def save(spark: SparkSession, sfDir: String, query: String): Unit = {
+    val kept = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries(query)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    // same isolation as Bench.once: drop the pin blocks the query leaked
+    (spark.sparkContext.getPersistentRDDs -- kept).values
+      .foreach(_.unpersist(blocking = true))
+  }
 
   def run(spark: SparkSession, sfDir: String, query: String): Run = {
-    val kept = spark.sparkContext.getPersistentRDDs.keySet
-    def save(): Unit = {
-      SparkEntry.queries(query)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // same isolation as Bench.once: drop the pin blocks the query leaked
-      (spark.sparkContext.getPersistentRDDs -- kept).values
-        .foreach(_.unpersist(blocking = true))
-    }
-    save()
+    save(spark, sfDir, query)
     GraftBridge.drainListeners(spark)
     val executions = new ConcurrentLinkedQueue[QueryExecution]()
     val stages = new ConcurrentLinkedQueue[Stage]()
@@ -84,12 +97,15 @@ object Probe {
     spark.listenerManager.register(planListener)
     spark.sparkContext.addSparkListener(stageListener)
     try {
+      val (n0, ns0) = codegen()
       val t0 = System.nanoTime()
-      save()
+      save(spark, sfDir, query)
       val seconds = (System.nanoTime() - t0) / 1e9
+      val (n1, ns1) = codegen()
       GraftBridge.drainListeners(spark)
       // construction-time collects come first; the noop save runs last
-      Run(query, seconds, executions.asScala.last, stages.asScala.toVector)
+      Run(query, seconds, executions.asScala.last, stages.asScala.toVector,
+        n1 - n0, (ns1 - ns0) / 1e6)
     } finally {
       spark.listenerManager.unregister(planListener)
       spark.sparkContext.removeSparkListener(stageListener)
@@ -114,7 +130,8 @@ object Probe {
   }
 
   def stages(r: Run): String =
-    (f"[probe] ${r.query} total ${r.seconds}%.2f s, ${r.stages.size} stages" +:
+    ((f"[probe] ${r.query} total ${r.seconds}%.2f s, ${r.stages.size} stages, " +
+      f"codegen ${r.compiles} classes ${r.compileMs}%.0f ms") +:
       r.stages.sortBy(-_.ms).take(14).map { s =>
         f"[probe]   ${s.ms}%6d ms  tasks=${s.tasks}%4d maxTask=${s.maxTaskMs}%5d " +
           f"run=${s.runMs}%6d gc=${s.gcMs}%5d deser=${s.deserMs}%5d  " +

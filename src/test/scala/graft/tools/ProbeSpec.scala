@@ -25,6 +25,12 @@ class ProbeSpec extends SparkSpec {
     assert(Probe.scans(q1) == (scans.size, reused.size))
   }
 
+  test("stages mode reports the measured run's codegen: 0 classes after the warm-up") {
+    val header = Probe.stages(q1).linesIterator.next()
+    assert(q1.compiles == 0, header)
+    assert(header.contains("codegen 0 classes 0 ms"), header)
+  }
+
   test("stages mode shows no table-load stage: loading a table runs no job") {
     val q2 = Probe.run(spark, sf, "q2_missed_display")
     assert(q2.stages.nonEmpty)
